@@ -28,7 +28,10 @@ Pipeline stage mapping to the reference (SURVEY.md §2/§3):
                          folding each term's runs into one posting row.
   merge_hot_partials   ~ compute_partition_boundary_lcp (:431-447):
                          stitch cross-partition metadata — here, merge
-                         the salted partial postings of hot terms.
+                         each term's rows into one (the salted partials
+                         of hot terms, and every term of the segments a
+                         compaction merges) in the same batch-decode
+                         kernel shape as assemble_postings.
 
 Posting row schema (FIXTURES.md §3, plus dls so queries never join a
 10^12-row doc_stats table — doc lengths travel with the posting):
@@ -46,8 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from capsbm25.codec import (decode_pair_positions, decode_varints,
-                            delta_decode, encode_varints_grouped,
+from capsbm25.codec import (decode_varints, encode_varints_grouped,
                             permute_pair_payload, sorted_member_mask)
 from capsbm25.config import BuildConfig
 from capsbm25.partition import PartitionPlan
@@ -536,6 +538,60 @@ def _posting_rows(flushes, N, avgdl, cfg, hot_terms):
     return pd.DataFrame(out, columns=POSTINGS_COLS)
 
 
+def _decode_rows(pdf: pd.DataFrame, count_col: str, with_pos: bool):
+    """Batch-decode the payload of posting-shaped rows (runs or
+    postings): ONE varint pass per column over the whole Arrow batch
+    (rows are self-delimiting), then a segmented cumsum sized by
+    ``pdf[count_col]`` rebuilds absolute doc_ids per row, and per pair
+    for positions — instead of numpy decode calls per row.
+
+    Returns (docs, tfs, dls, pos, row_bounds, pos_bounds): flat int64
+    arrays in row order; row i owns values row_bounds[i]:row_bounds[i+1]
+    and positions pos_bounds[i]:pos_bounds[i+1] (pos and pos_bounds are
+    None unless with_pos). Raises ValueError when a row's doc_ids
+    decode to a count other than its count column, or a column's total
+    disagrees — mis-sized rows would otherwise shift values between
+    rows silently."""
+    n_arr = pdf[count_col].to_numpy(np.int64)
+    total = int(n_arr.sum())
+    row_bounds = np.concatenate(([0], np.cumsum(n_arr)))
+    doc_bufs = pdf["doc_ids"].tolist()
+    joined = b"".join(doc_bufs)
+    gaps = decode_varints(joined).astype(np.int64)
+    # per-row value count = terminator bytes (MSB clear) in its slice
+    byte_bounds = np.concatenate(
+        ([0], np.cumsum(np.fromiter(map(len, doc_bufs), np.int64,
+                                    len(doc_bufs)))))
+    ends = np.flatnonzero(np.frombuffer(joined, np.uint8) < 0x80)
+    counts = np.diff(np.searchsorted(ends, byte_bounds))
+    bad = np.flatnonzero(counts != n_arr)
+    if bad.size:
+        i = int(bad[0])
+        raise ValueError(
+            f"posting payload corrupt: row {i} (term {pdf['term'].iat[i]!r})"
+            f" decodes {int(counts[i])} doc ids, {count_col}={int(n_arr[i])}")
+    tfs = decode_varints(b"".join(pdf["tfs"])).astype(np.int64)
+    dls = decode_varints(b"".join(pdf["dls"])).astype(np.int64)
+    if tfs.size != total or dls.size != total:
+        raise ValueError(
+            f"posting payload corrupt: decoded {tfs.size}/{dls.size} "
+            f"tfs/dls, expected {total}")
+    c = np.concatenate(([0], np.cumsum(gaps)))
+    docs = c[1:] - np.repeat(c[row_bounds[:-1]], n_arr)
+    if not with_pos:
+        return docs, tfs, dls, None, row_bounds, None
+    # positions: absolute value at every PAIR start; pair sizes come
+    # from the decoded tfs
+    pgaps = decode_varints(b"".join(pdf["pos"])).astype(np.int64)
+    pair_cum = np.concatenate(([0], np.cumsum(tfs)))
+    if pgaps.size != pair_cum[-1]:
+        raise ValueError(
+            f"pos payload corrupt: {pgaps.size} vs {int(pair_cum[-1])}")
+    pc = np.concatenate(([0], np.cumsum(pgaps)))
+    pos = pc[1:] - np.repeat(pc[pair_cum[:-1]], tfs)
+    return docs, tfs, dls, pos, row_bounds, pair_cum[row_bounds]
+
+
 def assemble_postings(
     runs: DataFrame,
     plan: PartitionPlan,
@@ -596,46 +652,14 @@ def assemble_postings(
         for pdf in it:
             if not len(pdf):
                 continue
-            # batch decode: ONE varint pass per column for the whole
-            # Arrow batch (runs are self-delimiting), then a vectorized
-            # segmented cumsum rebuilds absolute doc_ids per run —
-            # instead of 3 numpy decode calls per run row
-            n_arr = pdf["n"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(n_arr)[:-1]))
-            total = int(n_arr.sum())
-            gaps = decode_varints(b"".join(pdf["doc_ids"])).astype(np.int64)
-            tfs = decode_varints(b"".join(pdf["tfs"])).astype(np.int64)
-            dls = decode_varints(b"".join(pdf["dls"])).astype(np.int64)
-            if gaps.size != total or tfs.size != total or dls.size != total:
-                raise ValueError(
-                    f"run payload corrupt: decoded {gaps.size}/{tfs.size}/"
-                    f"{dls.size} values, expected {total}"
-                )
-            c = np.cumsum(gaps)
-            prev = np.concatenate(([0], c[starts[1:] - 1]))
-            docs = c - np.repeat(prev, n_arr)
-            if with_pos:
-                # positions: absolute value at every PAIR start; pair
-                # sizes come from the decoded tfs
-                pgaps = decode_varints(b"".join(pdf["pos"])).astype(np.int64)
-                n_pos = int(tfs.sum())
-                if pgaps.size != n_pos:
-                    raise ValueError(
-                        f"pos payload corrupt: {pgaps.size} vs {n_pos}")
-                pair_starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-                pc = np.cumsum(pgaps)
-                pprev = np.concatenate(([0], pc[pair_starts[1:] - 1]))
-                pos_flat = pc - np.repeat(pprev, tfs)
-                # per-run boundaries in position space
-                run_cum = np.concatenate(([0], np.cumsum(tfs)))
-                run_pos_bounds = run_cum[np.append(starts, total)]
+            docs, tfs, dls, pos_flat, row_bounds, run_pos_bounds = (
+                _decode_rows(pdf, "n", with_pos))
             terms = pdf["term"].to_numpy(dtype=object)
             pids = pdf["part_id"].to_numpy()
             newg = np.ones(len(pdf), dtype=bool)
             newg[1:] = (terms[1:] != terms[:-1]) | (pids[1:] != pids[:-1])
             g_starts = np.flatnonzero(newg)
             g_ends = np.append(g_starts[1:], len(pdf))
-            row_bounds = np.append(starts, total)
             for r0, r1 in zip(g_starts, g_ends):
                 kk = (terms[r0], int(pids[r0]))
                 lo, hi = row_bounds[r0], row_bounds[r1]
@@ -665,53 +689,100 @@ def merge_hot_partials(
     partials: DataFrame, N: int, avgdl: float, cfg: BuildConfig | None = None,
     drop: "np.ndarray | None" = None,
 ) -> DataFrame:
-    """Stitch salted partial postings into final rows (boundary fix-up).
+    """Merge every term's posting rows into one row (boundary fix-up):
+    the build stitches its salted hot-term partials here, and tiered
+    and full compaction feed it every term of the segments they merge
+    (a single-row term keeps its payload bytes).
 
-    Only hot terms reach this groupBy — its input is tiny (a handful of
-    rows per hot term), so the extra shuffle is negligible.
+    Shape of assemble_postings: ``repartition("term")`` (AQE coalesces
+    the exchange, so a small merge writes one file),
+    ``sortWithinPartitions("term")``, then an Arrow kernel that decodes
+    each batch once (_decode_rows), masks ``drop`` once, sorts every
+    term's pairs by doc in one lexsort and encodes up to 4096 terms per
+    _posting_rows call. A term's rows may straddle Arrow batches: the
+    batch's last term is carried into the next batch. Strict doc-id
+    increase is re-checked by the encoder, so a doc in two rows of one
+    term fails loudly; the merged row takes the smallest part_id and
+    partial=False.
 
     drop: optional SORTED int64 array of doc ids to physically remove
     while merging (compaction applying delete tombstones — the Lucene
     merge-drops-deleted-docs analog), either a plain ndarray or a
     pyspark Broadcast of one (preferred beyond trivial sizes: one copy
-    per executor instead of a pickle per task closure). N/avgdl must
-    then be the LIVE stats so recomputed block maxima bound the
-    post-delete scores. A term whose docs are all dropped vanishes
-    (no df=0 rows).
+    per executor instead of a pickle per task closure). A term whose
+    docs are all dropped vanishes (no df=0 rows). N/avgdl are passed
+    through to _posting_rows (the live stats when ``drop`` is set).
     """
     from pyspark.broadcast import Broadcast
 
     cfg = cfg or BuildConfig()
-
     with_pos = cfg.index_positions
+    cols = ["term", "df", "doc_ids", "tfs", "dls", "part_id"]
+    if with_pos:
+        cols.append("pos")
+    shuffled = (partials.select(*cols).repartition("term")
+                .sortWithinPartitions("term"))
 
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        nonlocal drop
-        if isinstance(drop, Broadcast):
-            drop = drop.value
-        docs = np.concatenate([delta_decode(b) for b in pdf["doc_ids"]])
-        tfs = np.concatenate(
-            [decode_varints(b).astype(np.int64) for b in pdf["tfs"]]
-        )
-        dls = np.concatenate(
-            [decode_varints(b).astype(np.int64) for b in pdf["dls"]]
-        )
-        pos = (
-            decode_pair_positions(b"".join(pdf["pos"]), tfs)
-            if with_pos else None
-        )
-        if drop is not None and drop.size and docs.size:
-            keep = ~sorted_member_mask(drop, docs)
-            if pos is not None:
-                pos = pos[np.repeat(keep, tfs)]
-            docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-            if docs.size == 0:
-                return pd.DataFrame([], columns=POSTINGS_COLS)
-        order = np.argsort(docs, kind="stable")
-        part_id = int(pdf["part_id"].min())
-        flush = [key[0], docs[order], tfs[order], dls[order], part_id]
-        if pos is not None:
-            flush.append(permute_pair_payload(pos, tfs, order))
-        return _posting_rows([tuple(flush)], N, avgdl, cfg, set())
+    def kernel(it):
+        ids = drop.value if isinstance(drop, Broadcast) else drop
+        flushes: list = []
+        carry = None  # raw rows of the last term seen, maybe unfinished
 
-    return partials.groupBy("term").applyInPandas(merge, schema=POSTINGS_SCHEMA)
+        def merge(pdf):
+            terms = pdf["term"].to_numpy(dtype=object)
+            newg = np.ones(len(pdf), dtype=bool)
+            newg[1:] = terms[1:] != terms[:-1]
+            g_starts = np.flatnonzero(newg)
+            docs, tfs, dls, pos, row_bounds, _ = _decode_rows(
+                pdf, "df", with_pos)
+            g = np.repeat(np.cumsum(newg) - 1, np.diff(row_bounds))
+            if ids is not None and ids.size and docs.size:
+                keep = ~sorted_member_mask(ids, docs)
+                if not keep.all():
+                    if with_pos:
+                        pos = pos[np.repeat(keep, tfs)]
+                    docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
+                    g = g[keep]
+            if docs.size > 1 and ((docs[1:] <= docs[:-1])
+                                  & (g[1:] == g[:-1])).any():
+                o = np.lexsort((docs, g))
+                if with_pos:
+                    pos = permute_pair_payload(pos, tfs, o)
+                docs, tfs, dls, g = docs[o], tfs[o], dls[o], g[o]
+            sizes = np.bincount(g, minlength=g_starts.size)
+            vb = np.concatenate(([0], np.cumsum(sizes)))
+            if with_pos:
+                pb = np.concatenate(([0], np.cumsum(tfs)))[vb]
+            pids = np.minimum.reduceat(
+                pdf["part_id"].to_numpy(np.int64), g_starts)
+            # a term whose docs were all dropped vanishes
+            for j in np.flatnonzero(sizes):
+                lo, hi = vb[j], vb[j + 1]
+                f = (terms[g_starts[j]], docs[lo:hi], tfs[lo:hi],
+                     dls[lo:hi], pids[j])
+                flushes.append(f + (pos[pb[j]:pb[j + 1]],) if with_pos
+                               else f)
+
+        def drain(final):
+            while len(flushes) >= 4096 or (final and flushes):
+                yield _posting_rows(flushes[:4096], N, avgdl, cfg, set())
+                del flushes[:4096]
+
+        for pdf in it:
+            if not len(pdf):
+                continue
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            terms = pdf["term"].to_numpy(dtype=object)
+            last = len(pdf) - 1
+            while last and terms[last - 1] == terms[-1]:
+                last -= 1
+            carry = pdf.iloc[last:]
+            if last:
+                merge(pdf.iloc[:last])
+                yield from drain(False)
+        if carry is not None:
+            merge(carry)
+        yield from drain(True)
+
+    return shuffled.mapInPandas(kernel, schema=POSTINGS_SCHEMA)

@@ -172,8 +172,8 @@ def process_batch(
         plan = plan_from_sample(
             arrow_collect(sample.select("term", "tf")), cfg)
 
-        # block maxima inside a segment use segment-local stats; the
-        # query kernel recomputes bounds when merging segments (query.py)
+        # the segment's summed dl feeds the stream stats below; no score
+        # bound is stored, queries score with the live global N/avgdl
         seg_dl = docs.agg(F.sum("dl").alias("s")).collect()[0]["s"] or 0
         seg_avgdl = (seg_dl / n_rows) if n_rows else 0.0
         postings = assemble_postings(
@@ -527,8 +527,7 @@ def compact_segments(
     segments into one — every term collapses back to a single posting
     row, so the query kernel's single-row fast path applies again. Delete
     tombstones (delete_docs) are APPLIED: tombstoned docs are
-    physically dropped from postings AND doc metadata, block maxima
-    are recomputed with the post-delete LIVE N/avgdl, and stats shrink
+    physically dropped from postings AND doc metadata, and stats shrink
     to exact live values — after compaction, queries need no
     doc_exclude and the index is rank-identical to a fresh batch build
     over the surviving corpus (tested). The doc-id allocator
@@ -856,8 +855,8 @@ def _compact_tiered(spark, out_dir, cfg, stats, merge_factor,
                     np.unique(g_del["doc_id"].to_numpy(np.int64)))
         rows_in = sum(s["rows"] for s in g)
         dl_in = sum(s["dl"] for s in g)
-        # block-max context: post-merge live global stats (the kernel
-        # recomputes exact uppers at query time anyway — tested)
+        # post-merge live global stats (the encoder stores no score
+        # bound; queries read N/avgdl from the stream stats)
         n_ctx = max(stats["N"] - len(g_del), 1)
         avg_ctx = (stats["total_dl"] - int(g_del["dl"].sum())) / n_ctx
         merged = merge_hot_partials(g_post, n_ctx, avg_ctx, cfg,
