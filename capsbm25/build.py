@@ -3,29 +3,34 @@
 per-stage wall-clock instrumentation), plus what the reference lacks:
 partition-grained checkpoint/resume, lineage, and build metrics.
 
-Stages (each records a manifest row; resume skips rows marked done):
+One construction path. Stages (each records a manifest row; resume skips
+rows marked done, and refuses a manifest it cannot verify):
 
+  id_plan     the ingest contract (docids.compute_id_plan: conv_id a
+              non-null string without NUL, turn_idx a non-null integer
+              in 0..9,999,999,999; one ValueError per broken rule) and
+              the doc-id plan — splitters + offsets — from one bounded
+              key-scan job, before any exchange
   plan        seeded sample -> PartitionPlan, persisted verbatim
               into the manifest (lineage: the exact shuffle plan; the
-              doc-id plan — splitters + offsets — rides this record
-              too)
-  pairs       FUSED id-assignment + run packing + doc-stats emission:
-              one exchange moves the corpus text from the scan into
-              run packing, ids assigned from the persisted id plan
-              inside the same Arrow pass (identical ids to
-              assign_doc_ids — differential-tested); the pass also
+              doc-id plan rides this record too)
+  pairs       id assignment + run packing + doc-stats emission in one
+              Arrow pass after one exchange of the corpus text; ids
+              come from the persisted id plan (identical to
+              assign_doc_ids — differential-tested), and the pass also
               emits packed per-doc (conv_id, turn_idx, dl) rows under
-              pairs/wave=-1, so no second full-corpus tokenize pass
-              exists. Runs staged to <out>/pairs partitioned by wave —
-              the double-buffer analog (Suffix_Array.hpp:33-34) and
-              the resume anchor
-  docs        unpack pairs/wave=-1 into the doc_stats artifact — a
-              cheap narrow job overlapped with the waves (N and avgdl
-              are already exact from the pairs observation)
+              pairs/wave=-1. Runs are staged to <out>/pairs partitioned
+              by wave — the double-buffer analog (Suffix_Array.hpp:33-34)
+              and the resume anchor
+  docs        unpack pairs/wave=-1 into the doc_stats table (source
+              turn_idx type kept) — a cheap narrow job overlapped with
+              the build's tail (N and avgdl are already exact from the
+              pairs observation)
   wave=K      range shuffle + sort + assemble for part_ids in wave K,
-              written to <out>/postings/wave=K; independent, idempotent,
-              individually checkpointed Spark jobs
+              written to <out>/postings/wave=K; one sequential loop of
+              idempotent, individually checkpointed Spark jobs
   hot_merge   salted-partial stitch -> <out>/postings/wave=9999
+  dictionary  narrow (term, part_id, df, cf, tlen) side index
 
 Every wave is verified by a read-back checksum (xxhash64 aggregate) —
 the spirit of the reference's is_sorted() validation hook
@@ -46,7 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from capsbm25.config import BuildConfig
-from capsbm25.docids import assign_doc_ids
 from capsbm25.partition import PartitionPlan, plan_from_sample
 from capsbm25.catalog import arrow_collect, write_table
 from capsbm25.postings import (
@@ -177,27 +181,40 @@ def build_index(
     stats_path = os.path.join(out_dir, "doc_stats")
     pairs_path = os.path.join(out_dir, "pairs")
     postings_path = os.path.join(out_dir, "postings")
+    corpus_json = os.path.join(out_dir, "corpus_stats.json")
 
-    # --- doc-id plan (driver-side; one bounded job over the key
-    #     columns). Persisted in the plan AND docs manifest records so
-    #     resumed builds reuse the exact plan; compute_id_plan is
-    #     deterministic on an unchanged corpus either way, and the
-    #     pairs observation cross-checks the row count. ---
+    def refuse_resume(why: str):
+        raise RuntimeError(
+            f"cannot resume the build at {out_dir}: {why}; a pre-fused "
+            "layout — rebuild with resume=False")
+
+    def read_corpus_stats() -> dict:
+        if not os.path.exists(corpus_json):
+            refuse_resume("its done stages left no corpus_stats.json")
+        with open(corpus_json) as f:
+            return json.load(f)
+
+    # --- ingest contract + doc-id plan. check_ingest_schema (no job)
+    #     runs on every call, resume included, and yields the turn_idx
+    #     type the doc_stats table keeps; compute_id_plan checks schema
+    #     and values in its one key-scan job, before any exchange. The
+    #     id plan is persisted in the plan and docs manifest records; a
+    #     resume past the pairs stage reuses it (the corpus is not read
+    #     again), an earlier resume recomputes it, which checks the
+    #     corpus. A resume that finds a done plan or pairs stage without
+    #     a persisted plan cannot verify its staged ids and refuses. ---
     #
-    #     Round 8 (session 2): the separate doc_stats pass is GONE on
-    #     the common corpus shape. extract_runs already tokenizes every
-    #     doc post-id-exchange, and conv_id/turn_idx are that exchange's
-    #     sort keys (it carries them anyway) — so the pairs pass now
-    #     emits packed per-segment doc-stats rows (part_id=-1, staged
-    #     under pairs/wave=-1; postings._doc_stats_frame) and a cheap
-    #     unpack job — overlapped with the waves on a pool thread —
-    #     writes the doc_stats table. One full-corpus scan + tokenize
-    #     (the old dl pass) removed per build (guide §1.2 step 1:
-    #     remove passes; §2.3: the id exchange sheds its second run).
-    #     N/avgdl come from an Observation on the pairs write, so they
-    #     are known before the waves exactly as before.
-    from capsbm25.docids import IdPlan, compute_id_plan
+    #     One doc-stats path: run extraction (the pairs stage) already
+    #     tokenizes every doc after the id exchange, which carries
+    #     conv_id/turn_idx as its sort keys, so the same pass emits
+    #     packed per-segment doc-stats rows (part_id=-1, staged under
+    #     pairs/wave=-1; postings._doc_stats_frame). An Observation on
+    #     the pairs write yields N/avgdl before the waves, and the docs
+    #     stage unpacks the staging rows into the doc_stats table on a
+    #     pool thread behind the waves.
+    from capsbm25.docids import IdPlan, check_ingest_schema, compute_id_plan
 
+    turn_ddl = check_ingest_schema(transcripts)
     docs_rec = man.done("docs")
     docs_future = None
     corpus: dict | None = None
@@ -210,26 +227,25 @@ def build_index(
                 if rec and rec.get("id_plan"):
                     id_plan = IdPlan.from_json(rec["id_plan"])
                     break
-        if id_plan is None:
-            id_plan = compute_id_plan(transcripts, cfg)
+            if id_plan is None and (man.done("plan") or man.done("pairs")):
+                refuse_resume("a done plan/pairs stage but no persisted "
+                              "id_plan")
+        if id_plan is None or not man.done("pairs"):
+            # the pairs stage has yet to read the corpus: check the
+            # ingest contract on it, and hold a resumed corpus to the
+            # row count the persisted plan was built on
+            fresh = compute_id_plan(transcripts, cfg)
+            if id_plan is not None and fresh.n_rows != id_plan.n_rows:
+                raise RuntimeError(
+                    f"corpus changed since the interrupted build: its id "
+                    f"plan counted {id_plan.n_rows} rows, the corpus now "
+                    f"has {fresh.n_rows} — rebuild with resume=False")
+            id_plan = fresh
         metrics["id_plan"] = {"sec": round(time.time() - t_idplan, 3)}
 
         if resume and docs_rec:
             metrics["docs"] = {"skipped": True}
-            with open(os.path.join(out_dir, "corpus_stats.json")) as f:
-                corpus = json.load(f)
-
-        # the fused doc-stats emission packs conv_id as \x00-joined
-        # strings and turn_idx as int64 — reproducible only for these
-        # source dtypes (every engine corpus today); anything else
-        # falls back to the legacy separate dl pass
-        src_fields = {f.name: f.dataType.simpleString()
-                      for f in transcripts.schema.fields}
-        fused_stats = (
-            src_fields.get("conv_id") == "string"
-            and src_fields.get("turn_idx") in
-            ("tinyint", "smallint", "int", "bigint")
-        )
+            corpus = read_corpus_stats()
 
         # adaptive partitioning resolves HERE, the first point N is known
         # (resume-safe: a fresh build reads N off the id plan's exact
@@ -237,49 +253,6 @@ def build_index(
         # same number, so both resolve to the identical part count)
         N = corpus["N"] if corpus is not None else id_plan.n_rows
         cfg = cfg.resolve_parts(N)
-
-        if not fused_stats and corpus is None:
-            # legacy dl pass (non-string conv_id / non-integral
-            # turn_idx): tokenize-count + id shuffle + write, exactly
-            # the pre-session-2 docs stage
-            t_docs = time.time()
-
-            def stage_docs_legacy() -> dict:
-                from pyspark.sql import Observation
-
-                from capsbm25.docids import make_dl_udf
-
-                narrow = transcripts.select(
-                    "conv_id", "turn_idx",
-                    make_dl_udf(cfg)(F.col("text")).alias("dl"),
-                )
-                stats = assign_doc_ids(narrow, cfg, id_plan=id_plan).select(
-                    "doc_id", "conv_id", "turn_idx", "dl"
-                )
-                obs = Observation("docs")
-                stats = stats.observe(obs, F.count(F.lit(1)).alias("n"),
-                                      F.sum("dl").alias("sum_dl"))
-                write_table(stats, stats_path)
-                m = obs.get
-                n = int(m["n"])
-                if n != id_plan.n_rows:
-                    raise RuntimeError(
-                        f"corpus changed mid-build: id plan counted "
-                        f"{id_plan.n_rows} rows, doc_stats wrote {n}"
-                    )
-                corp = {"N": n,
-                        "avgdl": (m["sum_dl"] or 0) / n if n else 0.0,
-                        "config": cfg.persist_dict()}
-                with open(os.path.join(out_dir, "corpus_stats.json"),
-                          "w") as f:
-                    json.dump(corp, f)
-                rec = man.add("docs", "done", t_docs, rows=n, **corp,
-                              id_plan=id_plan.to_json())
-                metrics["docs"] = {
-                    "sec": round(rec["finished_ts"] - t_docs, 3), "rows": n}
-                return corp
-
-            corpus = stage_docs_legacy()
 
         # --- stage: plan (samplesort splitters + hot terms; lineage) ---
         def stage_plan():
@@ -321,12 +294,11 @@ def build_index(
             # (pair-mass-heavy) — contiguous blocks put all of one kind
             # in one wave and the wave durations skewed ~6x at 10M
             # turns; interleaving balances both axes.
-            # fused_stats: doc-stats rows ride part_id=-1 -> wave=-1,
-            # a staging dir the wave loop below never assembles
+            # Doc-stats rows ride part_id=-1 -> wave=-1, a staging dir
+            # the wave loop below never assembles.
             pw = extract_runs(
                 transcripts.select("conv_id", "turn_idx", "text"),
                 cfg, plan=plan, id_plan=id_plan,
-                emit_doc_stats=fused_stats,
             ).withColumn(
                 "wave",
                 F.when(F.col("part_id") < 0, F.lit(-1))
@@ -343,45 +315,41 @@ def build_index(
             )
             write_table(pw, pairs_path, partition_by=["wave"])
             m = obs.get
-            rec = {"rows": int(m["pairs"] or 0), "runs": int(m["runs"] or 0)}
-            if fused_stats:
-                n = int(m["n_docs"] or 0)
-                if n != id_plan.n_rows:
-                    raise RuntimeError(
-                        f"corpus changed mid-build: id plan counted "
-                        f"{id_plan.n_rows} rows, the run extraction saw {n}"
-                    )
-                corp = {"N": n,
-                        "avgdl": (m["sum_dl"] or 0) / n if n else 0.0,
-                        "config": cfg.persist_dict()}
-                with open(os.path.join(out_dir, "corpus_stats.json"),
-                          "w") as f:
-                    json.dump(corp, f)
-                rec.update(n_docs=n, sum_dl=int(m["sum_dl"] or 0))
-            return rec
+            n = int(m["n_docs"] or 0)
+            if n != id_plan.n_rows:
+                raise RuntimeError(
+                    f"corpus changed mid-build: id plan counted "
+                    f"{id_plan.n_rows} rows, the run extraction saw {n}"
+                )
+            corp = {"N": n,
+                    "avgdl": (m["sum_dl"] or 0) / n if n else 0.0,
+                    "config": cfg.persist_dict()}
+            with open(corpus_json, "w") as f:
+                json.dump(corp, f)
+            return {"rows": int(m["pairs"] or 0), "runs": int(m["runs"] or 0),
+                    "n_docs": n, "sum_dl": int(m["sum_dl"] or 0)}
 
         timed("pairs", stage_pairs)
 
         if corpus is None:
-            # fused path: stage_pairs wrote corpus_stats.json before its
-            # manifest record (a completed pairs stage implies the json
-            # exists — also the resume source when docs is not yet done)
-            with open(os.path.join(out_dir, "corpus_stats.json")) as f:
-                corpus = json.load(f)
+            # stage_pairs wrote corpus_stats.json before its manifest
+            # record, so a done pairs stage implies the json exists —
+            # also the resume source when docs is not yet done
+            corpus = read_corpus_stats()
         N, avgdl = corpus["N"], corpus["avgdl"]
 
-        # --- stage: docs (fused path: unpack pairs/wave=-1 into the
-        #     doc_stats table — a cheap narrow job, submitted to a pool
-        #     thread AFTER the waves so it back-fills the hot_merge /
+        # --- stage: docs (unpack pairs/wave=-1 into the doc_stats
+        #     table — a cheap narrow job, submitted to a pool thread
+        #     AFTER the waves so it back-fills the hot_merge /
         #     dictionary / checksum tail (small jobs that leave idle
         #     slots) instead of contending with the core-saturated wave
         #     exchanges (measured: wave0 +0.2s at 211k, +1-2s at 1.05M
         #     when submitted before the waves); joined before return
         #     and run synchronously on the stop_after_wave exit) ---
         stage_docs_unpack = None
-        if fused_stats and not (resume and docs_rec):
+        if not (resume and docs_rec):
             stats_src = os.path.join(pairs_path, "wave=-1")
-            turn_ddl = src_fields["turn_idx"]
+            # the source turn_idx type is restored in the table
             turn_np = {"tinyint": "int8", "smallint": "int16",
                        "int": "int32", "bigint": "int64"}[turn_ddl]
             stats_ddl = (f"doc_id long, conv_id string, "
@@ -394,11 +362,8 @@ def build_index(
 
                 t_docs = time.time()
                 if corpus["N"] > 0 and not os.path.isdir(stats_src):
-                    raise RuntimeError(
-                        f"pairs staging at {pairs_path} predates the "
-                        "fused doc-stats layout (no wave=-1) — rebuild "
-                        "with resume=False"
-                    )
+                    refuse_resume(f"pairs staging at {pairs_path} has no "
+                                  "wave=-1 doc stats")
                 if os.path.isdir(stats_src):
                     def unpack(it):
                         for pdf in it:
@@ -454,17 +419,30 @@ def build_index(
             if w >= 0  # wave=-1 is the packed doc-stats staging dir
         )
 
-        def make_stage_wave(w):
-            def stage_wave():
-                from pyspark.sql import Observation
+        # Waves assemble one after another; each wave's read-back
+        # checksum (a light column-pruned scan) runs on the pool thread
+        # and back-fills the NEXT wave's ramp-up — a small job under a
+        # saturated one costs ~nothing, where two overlapped assemblies
+        # only contend for the same cores. The checksum thread appends
+        # the manifest record, so a crash in the window re-runs that
+        # wave on resume. stop_after_wave (the kill-and-resume hook)
+        # joins the checksums, writes doc_stats synchronously and
+        # returns once wave stop_after_wave is done or skipped.
+        from pyspark.sql import Observation
 
+        wave_futs: list = []  # deferred checksum/record threads
+        for w in waves:
+            stage = f"wave={w}"
+            t0 = time.time()
+            if resume and man.done(stage):
+                metrics[stage] = {"skipped": True}
+            else:
                 wave_runs = spark.read.parquet(
                     os.path.join(pairs_path, f"wave={w}"))
                 obs = Observation(f"wave{w}")
                 wave_runs = wave_runs.observe(
                     obs, F.count(F.lit(1)).alias("runs"),
-                    F.sum("n").alias("pairs")
-                )
+                    F.sum("n").alias("pairs"))
                 out = assemble_postings(wave_runs, plan, N, avgdl, cfg)
                 dst = os.path.join(postings_path, f"wave={w}")
                 # partition the persisted postings BY part_id: a part_id
@@ -476,71 +454,6 @@ def build_index(
                 # corpus scale instead of relying on how the hash
                 # exchange happened to group part_ids into tasks
                 # (layout-asserted in tests/test_plans.py)
-                write_table(out, dst, partition_by=["part_id"])
-                h, n = _checksum(spark.read.parquet(dst))
-                m = obs.get
-                return {"rows": n, "checksum": h,
-                        "pairs": int(m["pairs"] or 0), "runs": int(m["runs"])}
-
-            return stage_wave
-
-        # Wave concurrency (guide §2.6): waves write disjoint
-        # postings/wave=K dirs and are individually
-        # manifest-checkpointed, so they CAN run overlapped to
-        # back-fill each other's stage tails. Whether that wins depends
-        # on whether wave stages leave idle capacity: on a cluster
-        # whose executor count exceeds tasks-per-wave (or with long
-        # straggler tails) it does; on a core-saturated local[32] box
-        # each wave's 64 tasks already fill every slot and overlap only
-        # adds contention (measured +2.7s at bench scale). Default 1
-        # (sequential); deployments opt in via
-        # cfg.extra["wave_concurrency"] or CAPSBM25_WAVE_CONCURRENCY.
-        wave_conc = int(cfg.extra.get(
-            "wave_concurrency",
-            os.environ.get("CAPSBM25_WAVE_CONCURRENCY", "1")))
-        wave_futs: list = []  # deferred checksum/record threads
-        if stop_after_wave is not None:
-            # fault-injection path (kill-and-resume tests): strictly
-            # sequential so "stopped after wave w" is well-defined
-            for w in waves:
-                timed(f"wave={w}", make_stage_wave(w))
-                if w >= stop_after_wave:
-                    if stage_docs_unpack is not None:
-                        stage_docs_unpack()
-                    return BuildResult(out_dir, N, avgdl, plan, metrics)
-        elif wave_conc > 1:
-            with ThreadPoolExecutor(max_workers=wave_conc) as wpool:
-                futs = [wpool.submit(timed, f"wave={w}",
-                                     make_stage_wave(w))
-                        for w in waves]
-                for f in futs:
-                    f.result()
-        else:
-            # sequential assembly, but each wave's read-back checksum
-            # (a light column-pruned scan) runs on the pool thread and
-            # back-fills the NEXT wave's ramp-up — unlike overlapping
-            # two full assemblies, a small job under a saturated one
-            # costs ~nothing (guide §2.6). The manifest record is
-            # appended by the checksum thread, so a crash in the window
-            # re-runs that wave on resume exactly as before.
-            wave_futs = []
-            for w in waves:
-                stage = f"wave={w}"
-                t0 = time.time()
-                if resume and man.done(stage):
-                    metrics[stage] = {"skipped": True}
-                    continue
-                from pyspark.sql import Observation
-
-                wave_runs = spark.read.parquet(
-                    os.path.join(pairs_path, f"wave={w}"))
-                obs = Observation(f"wave{w}")
-                wave_runs = wave_runs.observe(
-                    obs, F.count(F.lit(1)).alias("runs"),
-                    F.sum("n").alias("pairs"))
-                out = assemble_postings(wave_runs, plan, N, avgdl, cfg)
-                dst = os.path.join(postings_path, f"wave={w}")
-                # partitioned BY part_id — see make_stage_wave
                 write_table(out, dst, partition_by=["part_id"])
 
                 def finish(stage=stage, dst=dst, obs=obs, t0=t0):
@@ -554,6 +467,12 @@ def build_index(
                         "sec": round(rec["finished_ts"] - t0, 3), **kw}
 
                 wave_futs.append(pool.submit(finish))
+            if stop_after_wave is not None and w >= stop_after_wave:
+                for f in wave_futs:
+                    f.result()
+                if stage_docs_unpack is not None:
+                    stage_docs_unpack()
+                return BuildResult(out_dir, N, avgdl, plan, metrics)
 
         # the doc_stats unpack rides the hot_merge/dictionary/checksum
         # tail (fixed-overhead-bound jobs that leave executor slots
@@ -597,8 +516,6 @@ def build_index(
             # to discard.
             stale = os.path.join(postings_path, "wave=9999")
             if os.path.isdir(stale):
-                import shutil
-
                 shutil.rmtree(stale)
             # partial rows exist iff the plan salted hot terms: hot
             # terms come from the plan SAMPLE, so each one has >= 1

@@ -17,6 +17,12 @@ Two methods, tested equal:
   sequential prefix-sum at /root/reference/src/Suffix_Array.cpp:320-330)
   -> repartition + sortWithinPartitions + mapInPandas adding
   offset + local index. No global sort, no single-partition bottleneck.
+
+Ingest contract (checked once, in compute_id_plan, which build_index and
+streaming.process_batch both run before their id exchange): conv_id is a
+non-null string with no NUL codepoint; turn_idx is a non-null
+tinyint/smallint/int/bigint in 0..9,999,999,999. Each broken rule
+raises one ValueError on the driver.
 """
 
 from __future__ import annotations
@@ -34,9 +40,13 @@ from capsbm25.config import BuildConfig
 # variable-length ids ("src1" < "src10"). \x01, not \x00: numpy's
 # fixed-width unicode coercion silently STRIPS trailing NUL codepoints
 # (np.str_("\x00") == ""), which pandas applies during Series+scalar
-# concat. turn_idx is int32, 10 zero-padded digits keep lexicographic
-# == numeric order.
+# concat — and NUL itself is rejected at ingest (check_ingest_schema /
+# compute_id_plan), so \x01 is the lowest codepoint a conv_id can hold.
+# turn_idx is zero-padded to 10 digits, so lexicographic == numeric
+# order over exactly the range TURN_IDX_MAX admits.
 _SEP = "\x01"
+TURN_IDX_TYPES = ("tinyint", "smallint", "int", "bigint")
+TURN_IDX_MAX = 9_999_999_999
 
 
 def _key(conv_id: pd.Series, turn_idx: pd.Series) -> np.ndarray:
@@ -45,10 +55,47 @@ def _key(conv_id: pd.Series, turn_idx: pd.Series) -> np.ndarray:
     ).to_numpy(dtype=object)
 
 
+def check_ingest_schema(df: DataFrame) -> str:
+    """The schema half of the ingest contract, checked on the driver
+    with no Spark job: conv_id is a string column and turn_idx an
+    integral one. Returns turn_idx's type name (the doc_stats table
+    keeps the source type)."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    conv, turn = types.get("conv_id"), types.get("turn_idx")
+    if conv != "string":
+        raise ValueError(
+            f"conv_id must be a string column; got {conv or 'no such column'}")
+    if turn not in TURN_IDX_TYPES:
+        raise ValueError(
+            f"turn_idx must be an integer column "
+            f"({'/'.join(TURN_IDX_TYPES)}); got {turn or 'no such column'}")
+    return turn
+
+
+_CONV_FORM = "conv_id must be a non-null string with no NUL (\\x00)"
+_TURN_FORM = f"turn_idx must be a non-null integer in 0..{TURN_IDX_MAX:,}"
+
+
+def _ingest_value_rules() -> dict:
+    """The value half of the ingest contract: rule -> (predicate on a
+    violating row, error). compute_id_plan counts each predicate on
+    the Observation its key scan already carries, so checking adds no
+    Spark job."""
+    conv, turn = F.col("conv_id"), F.col("turn_idx")
+    return {
+        "null_conv_id": (conv.isNull(), f"null conv_id; {_CONV_FORM}"),
+        "nul_conv_id": (F.instr(conv, "\x00") > 0,
+                        f"conv_id contains a NUL codepoint; {_CONV_FORM}"),
+        "null_turn_idx": (turn.isNull(), f"null turn_idx; {_TURN_FORM}"),
+        "range_turn_idx": ((turn < 0) | (turn > TURN_IDX_MAX),
+                           f"turn_idx out of range; {_TURN_FORM}"),
+    }
+
+
 class IdPlan:
     """The persisted doc-id shuffle plan (splitters + per-part offsets)
     — lineage for the samplesort id assignment, and the contract that
-    lets SEPARATE passes (doc_stats write, fused run extraction) assign
+    lets SEPARATE passes (assign_doc_ids, the fused run extraction) assign
     IDENTICAL dense ids to the same corpus: both apply the same
     splitters and the same driver prefix-sum offsets, and within-part
     order is the deterministic (conv_id, turn_idx) sort."""
@@ -119,16 +166,6 @@ def make_dl_of(cfg: BuildConfig):
     return dl_of
 
 
-def make_dl_udf(cfg: BuildConfig):
-    dl_of = make_dl_of(cfg)
-
-    @F.pandas_udf("long")
-    def dl_udf(texts: pd.Series) -> pd.Series:
-        return dl_of(texts).astype(np.int64)
-
-    return dl_udf
-
-
 def compute_id_plan(df: DataFrame, cfg: BuildConfig) -> IdPlan:
     """Sample keys -> splitters -> per-part counts -> prefix-sum
     offsets. Two narrow jobs over (conv_id, turn_idx) only.
@@ -143,8 +180,15 @@ def compute_id_plan(df: DataFrame, cfg: BuildConfig) -> IdPlan:
     2. per-part counts (map-side partial agg, tiny shuffle) ->
        sequential prefix-sum on the driver (the analog of
        Suffix_Array.cpp:320-330).
+
+    It is also where the ingest contract is checked, before the id
+    exchange: the schema on the driver (check_ingest_schema), the
+    values by aggregates on the first job's Observation. Each broken
+    rule raises one ValueError naming the column and accepted form.
     """
     from pyspark.sql import Observation
+
+    check_ingest_schema(df)
 
     # the DOC-id split count only balances the id-assignment shuffle —
     # doc_ids themselves are dense ranks of (conv_id, turn_idx) and are
@@ -154,6 +198,7 @@ def compute_id_plan(df: DataFrame, cfg: BuildConfig) -> IdPlan:
     n_parts = cfg.num_part_ids or max(64, cfg.shuffle_partitions * 4)
     target = n_parts * cfg.samples_per_part
     obs = Observation()
+    rules = _ingest_value_rules()
     pri = F.xxhash64("conv_id", "turn_idx", F.lit(cfg.seed))
     # the limit has a 256k floor (a bounded ~10 MB driver fetch): when
     # the corpus fits under it the "sample" IS the complete key set and
@@ -165,24 +210,19 @@ def compute_id_plan(df: DataFrame, cfg: BuildConfig) -> IdPlan:
     lim = max(int(target * 1.2), 262_144)
     sample = arrow_collect(
         df.select("conv_id", "turn_idx")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .observe(obs, F.count(F.lit(1)).alias("n"),
+                 *(F.count(F.when(c, F.lit(1))).alias(k)
+                   for k, (c, _) in rules.items()))
         .orderBy(pri, "conv_id", "turn_idx")
         .limit(lim)
     )
-    n_rows = int(obs.get["n"])
+    m = obs.get
+    for k, (_, msg) in rules.items():
+        if m[k]:
+            raise ValueError(msg)
+    n_rows = int(m["n"])
     if n_rows == 0:
         return IdPlan(np.array([], dtype=object), {}, 0)
-    # \x01-separator precondition (see _SEP): a conv_id containing a
-    # codepoint BELOW \x01 (i.e. NUL) would make flattened-key order
-    # disagree with (conv_id, turn_idx) tuple order, silently breaking
-    # dense-rank ids. Spark strings can legally carry NUL — validate on
-    # the driver sample (cheap, catches real corpora; the same ids go
-    # through Spark-side tuple sorts that would then diverge).
-    if sample["conv_id"].astype(str).str.contains("\x00").any():
-        raise ValueError(
-            "conv_id contains a NUL codepoint — unsupported (the doc-id "
-            "key separator must sort below every conv_id character)"
-        )
     keys = np.sort(_key(sample["conv_id"], sample["turn_idx"]))
     n_eff = min(n_parts, max(1, keys.size))
     cuts = [keys[int(len(keys) * (i + 1) / n_eff) - 1] for i in range(n_eff - 1)]

@@ -47,7 +47,6 @@ from itertools import chain
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from capsbm25.codec import (decode_varints, encode_varints_grouped,
                             permute_pair_payload, sorted_member_mask)
@@ -195,18 +194,11 @@ def _doc_stats_frame(seg: pd.DataFrame, lens: np.ndarray) -> pd.DataFrame:
     plan part), doc_ids/tfs/dls hold RAW little-endian int64 doc_id /
     turn_idx / dl arrays (not varints — turn_idx carries no sign or
     monotonicity guarantee), pos holds the \\x00-joined conv_id
-    strings, n the doc count, last_doc the segment's summed dl."""
+    strings (the ingest contract rules out null and NUL conv_ids), n
+    the doc count, last_doc the segment's summed dl."""
     ids = seg["doc_id"].to_numpy(dtype=np.int64)
     turns = seg["turn_idx"].to_numpy(dtype=np.int64)
-    convs = seg["conv_id"]
-    if convs.isna().any():
-        raise ValueError(
-            "null conv_id unsupported by the fused doc_stats emission")
-    joined = "\x00".join(convs.astype(str))
-    if joined.count("\x00") != len(seg) - 1:
-        raise ValueError(
-            "conv_id contains a NUL codepoint — unsupported (the doc-id "
-            "key separator must sort below every conv_id character)")
+    joined = "\x00".join(seg["conv_id"])
     return pd.DataFrame([{
         "term": "", "part_id": -1,
         "first_doc": int(ids[0]), "last_doc": int(lens.sum()),
@@ -222,7 +214,6 @@ def extract_runs(
     plan: PartitionPlan | None = None,
     flush_pairs: int = 4_000_000,
     id_plan=None,
-    emit_doc_stats: bool = False,
 ) -> DataFrame:
     """docs(doc_id, text) -> packed sorted RUNS (see RUNS_SCHEMA).
 
@@ -234,6 +225,10 @@ def extract_runs(
     column crosses ONE exchange and never hits disk between scan and
     run packing. Ids are identical to assign_doc_ids with the same
     plan (same splitters/offsets/within-part sort; differential-tested).
+    The same pass also yields one packed doc-stats row per segment (see
+    _doc_stats_frame) under part_id=-1: per-doc dl comes from the token
+    lists this pass computes anyway, and conv_id/turn_idx ride the id
+    exchange as its sort keys, so the build needs no separate dl pass.
 
     Map-side only, the independent-subarray-sort stage of the samplesort
     graft (/root/reference/src/Suffix_Array.cpp:300-368): each task
@@ -253,17 +248,9 @@ def extract_runs(
     boundaries, so restarts can occur MID-batch and are split into
     monotonic segments) forces a flush, preserving the strictly-
     increasing-per-run invariant.
-
-    emit_doc_stats=True (fused mode only): the same pass additionally
-    yields one packed doc-stats row per segment (see _doc_stats_frame)
-    under part_id=-1 — per-doc dl comes from the token lists this pass
-    computes anyway, and conv_id/turn_idx ride the id exchange for
-    free (they are its sort keys, so the exchange already carries
-    them). This removes the build's separate full-corpus dl pass.
     """
     cfg = cfg or BuildConfig()
-    if emit_doc_stats and id_plan is None:
-        raise ValueError("emit_doc_stats requires fused id_plan mode")
+    fused = id_plan is not None
     from capsbm25.tokenize import make_series_tokenizer
 
     tok = make_series_tokenizer(cfg)
@@ -377,7 +364,7 @@ def extract_runs(
                 seg = pdf.iloc[bounds[si]:bounds[si + 1]]
                 if not len(seg):
                     continue
-                if emit_doc_stats:
+                if fused:
                     out, posflat, seg_lens = _batch_pairs(
                         seg, tok, with_pos=with_pos, with_doc_lens=True)
                     yield _doc_stats_frame(seg, seg_lens)
@@ -397,11 +384,9 @@ def extract_runs(
         if held:
             yield flush()
 
-    if id_plan is not None:
+    if fused:
         from capsbm25.docids import batch_id_assigner
 
-        keep = (["part_id", "conv_id", "turn_idx", "text"]
-                if emit_doc_stats else ["part_id", "text"])
         src = (
             docs.withColumn(
                 "part_id", id_plan.part_of_udf()("conv_id", "turn_idx")
@@ -411,7 +396,7 @@ def extract_runs(
                 "part_id",
             )
             .sortWithinPartitions("part_id", "conv_id", "turn_idx")
-            .select(*keep)
+            .select("part_id", "conv_id", "turn_idx", "text")
         )
 
         def kernel_fused(it):
@@ -419,14 +404,12 @@ def extract_runs(
 
             def with_ids():
                 for pdf in it:
-                    cols = {
+                    yield pd.DataFrame({
                         "doc_id": ider(pdf["part_id"].to_numpy()),
                         "text": pdf["text"].to_numpy(),
-                    }
-                    if emit_doc_stats:
-                        cols["conv_id"] = pdf["conv_id"].to_numpy()
-                        cols["turn_idx"] = pdf["turn_idx"].to_numpy()
-                    yield pd.DataFrame(cols)
+                        "conv_id": pdf["conv_id"].to_numpy(),
+                        "turn_idx": pdf["turn_idx"].to_numpy(),
+                    })
 
             yield from kernel(with_ids())
 

@@ -145,6 +145,8 @@ def process_batch(
     # hand a new batch ids still owned by surviving docs
     offset = stats.get("next_doc_id", stats["N"])
 
+    # the ingest contract is checked in here (compute_id_plan), before
+    # the id exchange moves any batch row
     docs = assign_doc_ids(batch_df, cfg, method="distributed", with_dl=True)
     docs = docs.withColumn("doc_id", F.col("doc_id") + F.lit(offset)).select(
         "doc_id", "conv_id", "turn_idx", "dl", "text"

@@ -3,7 +3,11 @@ produce an index identical to an uninterrupted build, skipping completed
 stages (the checkpoint/lineage requirement of the north rule — the
 reference's restart story is rerun-from-scratch)."""
 
+import json
+import os
+
 import pandas as pd
+import pytest
 
 from capsbm25 import fixtures as fx
 from capsbm25.build import Manifest, build_index, load_postings
@@ -107,3 +111,67 @@ def test_resume_after_hot_merge_crash_leftover(spark, tmp_path):
     assert "sec" in res.metrics["hot_merge"]
     pd.testing.assert_frame_equal(
         _postings_pdf(spark, full_out), _postings_pdf(spark, crash))
+
+
+def _stopped_build(spark, tmp_path, name):
+    pdf = fx.gen_transcripts_pdf(30, 42)
+    df = spark.createDataFrame(pdf)
+    cfg = BuildConfig(num_part_ids=8, shuffle_partitions=4, num_waves=2)
+    out = str(tmp_path / name)
+    build_index(spark, df, out, cfg, stop_after_wave=0)
+    return df, cfg, out
+
+
+def _rewrite_manifest(out, edit):
+    """Keep the records edit() returns (None drops one)."""
+    man = Manifest(out)
+    recs = [r for r in map(edit, man.records()) if r is not None]
+    with open(man.path, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in recs)
+
+
+def test_resume_refuses_pairs_without_corpus_stats(spark, tmp_path):
+    """A done pairs stage whose corpus_stats.json is gone (the layout
+    before doc stats rode the pairs pass) cannot be resumed: refuse
+    with the rebuild hint, not a raw FileNotFoundError."""
+    df, cfg, out = _stopped_build(spark, tmp_path, "nocorpus")
+    _rewrite_manifest(out, lambda r: None if r["stage"] == "docs" else r)
+    os.remove(os.path.join(out, "corpus_stats.json"))
+    with pytest.raises(RuntimeError,
+                       match="pre-fused layout — rebuild with resume=False"):
+        build_index(spark, df, out, cfg, resume=True)
+
+
+def test_resume_refuses_manifest_without_id_plan(spark, tmp_path):
+    """A done plan/pairs stage without a persisted id_plan: the staged
+    ids cannot be checked against a recomputed plan, so refuse."""
+    df, cfg, out = _stopped_build(spark, tmp_path, "noplan")
+
+    def strip(r):
+        r.pop("id_plan", None)
+        return None if r["stage"] == "docs" else r
+
+    _rewrite_manifest(out, strip)
+    with pytest.raises(RuntimeError,
+                       match="pre-fused layout — rebuild with resume=False"):
+        build_index(spark, df, out, cfg, resume=True)
+
+
+def test_resume_before_pairs_checks_the_corpus(spark, tmp_path):
+    """A resume whose pairs stage has not run reads the corpus again,
+    so it checks the ingest contract (a driver ValueError, not an
+    executor failure) and holds the corpus to the persisted row count."""
+    df, cfg, out = _stopped_build(spark, tmp_path, "early")
+    pdf = df.toPandas()
+    _rewrite_manifest(out, lambda r: r if r["stage"] == "plan" else None)
+
+    bad = pdf.copy()
+    bad["turn_idx"] = bad["turn_idx"].astype("Int64")
+    bad.loc[1, "turn_idx"] = pd.NA
+    with pytest.raises(ValueError, match="null turn_idx") as ei:
+        build_index(spark, spark.createDataFrame(bad), out, cfg, resume=True)
+    assert type(ei.value) is ValueError
+
+    with pytest.raises(RuntimeError, match="corpus changed since"):
+        build_index(spark, spark.createDataFrame(pdf.iloc[1:]), out, cfg,
+                    resume=True)
